@@ -20,9 +20,9 @@ from sparkstreaming_gmall_demo_spark.plans import REGISTRY  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the sale-detail 3-way
-    denormalization join (Q5) — exercises the reader (nanos fix not
-    needed here but decimal policy is), full-outer + broadcast joins,
-    and decimal aggregation."""
+    denormalization join (Q5) — exercises the reader's declared
+    schemas and decimal policy, full-outer + broadcast joins, and
+    decimal aggregation."""
     return REGISTRY["q5_sale_detail_join"].build(spark, "/root/testdata/sf0.001")
 
 

@@ -9,7 +9,7 @@ Architecture (Spark-first, NOT a port):
 - ``schemas``    -- one ``StructType`` per logical table / stream record
                     (reference keeps per-topic case classes; see
                     reference gmall-realtime bean/*.scala).
-- ``sources``    -- batch fixture reader (nanos-timestamp workaround),
+- ``sources``    -- batch fixture reader (declared schemas),
                     streaming source builders.
 - ``functions``  -- column-expression helpers (date/hour derivations,
                     money decimal policy, minute buckets, permille

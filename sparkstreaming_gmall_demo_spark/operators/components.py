@@ -17,6 +17,8 @@ contract, property-tested equivalent on random graphs.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -65,7 +67,9 @@ def connected_components(
     bound over-ran odd caps by up to two steps); with step-pairing the
     executed count is the largest odd number <= max_iter, and because
     the init round is fused into labeling, max_iter < 1 still executes
-    that one round (identity labels are never returned).
+    that one round (identity labels are never returned). Stopping at
+    the cap before a step reports no change warns (``RuntimeWarning``):
+    the labels returned are then not yet the components.
     """
 
     def _step(labels, edges, observe_change):
@@ -113,6 +117,13 @@ def connected_components(
         labels = stepped2.localCheckpoint()
         if (obs2.get["changed"] or 0) == 0:
             break
+    else:
+        warnings.warn(
+            f"connected_components stopped at max_iter={max_iter} "
+            "before converging; labels may be incomplete",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 

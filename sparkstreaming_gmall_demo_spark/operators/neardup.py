@@ -26,6 +26,14 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens
 
+
+def _check_prefix_threshold(threshold: float) -> None:
+    """The prefix length |X| - ceil(t·|X|) + 1 is at least 1 only for
+    t in (0, 1]; past 1 the in-row ``slice`` fails inside the plan."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+
+
 # ---------------------------------------------------------------------------
 # exact token-set Jaccard
 # ---------------------------------------------------------------------------
@@ -291,6 +299,7 @@ def prefix_filtered_containment_pairs(
     sort-window anywhere in the plan."""
     from pyspark.sql.window import Window
 
+    _check_prefix_threshold(threshold)
     sets = sets.localCheckpoint()
     posting = sets.select(
         "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok")
@@ -371,6 +380,7 @@ def prefix_filtered_jaccard_pairs(sets: DataFrame, threshold: float) -> DataFram
     """
     from pyspark.sql.window import Window
 
+    _check_prefix_threshold(threshold)
     sets = sets.localCheckpoint()
     posting = sets.select("doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok"))
     tokf = posting.withColumn(

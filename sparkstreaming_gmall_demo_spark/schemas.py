@@ -113,18 +113,55 @@ USER_INFO = T.StructType(
 
 # ---------------------------------------------------------------------------
 # B. Driver fixture tables (/root/testdata/sf*/; TESTDATA.md).
-# Types as they should look AFTER ingest (events.ts converted from the
-# raw nanos-long to TimestampType by sources.fixtures.load_table).
+# The exact read schemas of the parquet files: sources.fixtures.load_table
+# passes them to ``spark.read.schema`` so no read launches a
+# schema-inference job. The files store ``timestamp[us]`` with no
+# timezone, which Spark reads as TIMESTAMP_NTZ; every field is nullable.
+# tests/test_sources.py pins each one against Spark's inferred schema.
 # ---------------------------------------------------------------------------
 
-EVENTS = T.StructType(
+REGION = T.StructType(
     [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),  # JSON {"k": int}
+        T.StructField("r_regionkey", T.IntegerType()),
+        T.StructField("r_name", T.StringType()),
+    ]
+)
+
+NATION = T.StructType(
+    [
+        T.StructField("n_nationkey", T.IntegerType()),
+        T.StructField("n_name", T.StringType()),
+        T.StructField("n_regionkey", T.IntegerType()),
+    ]
+)
+
+CUSTOMER = T.StructType(
+    [
+        T.StructField("c_custkey", T.LongType()),
+        T.StructField("c_name", T.StringType()),
+        T.StructField("c_nationkey", T.IntegerType()),
+        T.StructField("c_acctbal", T.DoubleType()),
+        T.StructField("c_mktsegment", T.StringType()),
+    ]
+)
+
+SUPPLIER = T.StructType(
+    [
+        T.StructField("s_suppkey", T.LongType()),
+        T.StructField("s_name", T.StringType()),
+        T.StructField("s_nationkey", T.IntegerType()),
+        T.StructField("s_acctbal", T.DoubleType()),
+    ]
+)
+
+PART = T.StructType(
+    [
+        T.StructField("p_partkey", T.LongType()),
+        T.StructField("p_name", T.StringType()),
+        T.StructField("p_brand", T.StringType()),
+        T.StructField("p_type", T.StringType()),
+        T.StructField("p_size", T.IntegerType()),
+        T.StructField("p_retailprice", T.DoubleType()),
     ]
 )
 
@@ -134,7 +171,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
@@ -151,17 +188,18 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]
 )
 
-CUSTOMER = T.StructType(
+EVENTS = T.StructType(
     [
-        T.StructField("c_custkey", T.LongType()),
-        T.StructField("c_name", T.StringType()),
-        T.StructField("c_nationkey", T.IntegerType()),
-        T.StructField("c_acctbal", T.DoubleType()),
-        T.StructField("c_mktsegment", T.StringType()),
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),  # JSON {"k": int}
     ]
 )
 
@@ -183,15 +221,17 @@ EMBEDDINGS = T.StructType(
     ]
 )
 
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+FIXTURE_SCHEMAS: dict[str, T.StructType] = {
+    "region": REGION,
+    "nation": NATION,
+    "customer": CUSTOMER,
+    "supplier": SUPPLIER,
+    "part": PART,
+    "orders": ORDERS,
+    "lineitem": LINEITEM,
+    "events": EVENTS,
+    "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}
+
+FIXTURE_TABLES = tuple(FIXTURE_SCHEMAS)

@@ -13,14 +13,12 @@ Scale posture (100 TB / 1000-executor readiness):
   coalesces. On a real cluster this would be set ~2-3x total cores.
 - Session timezone pinned to UTC so date/hour derivations are
   deterministic and oracle-comparable regardless of host TZ.
-- Nanosecond parquet timestamps (driver fixtures) are read as longs
-  (``spark.sql.legacy.parquet.nanosAsLong``) and converted to
-  timestamps in the reader (see sources.fixtures).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -28,9 +26,6 @@ from pyspark.sql import SparkSession
 # time and defensively to externally-provided sessions (the driver
 # harness builds its own SparkSession and hands it to our callables).
 RUNTIME_CONFS: dict[str, str] = {
-    # Driver fixtures store TIMESTAMP(NANOS); Spark 4.x rejects them by
-    # default (PARQUET_TYPE_ILLEGAL). Read as long + convert in reader.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Deterministic date/hour math across engines (DuckDB is naive-TZ).
     "spark.sql.session.timeZone": "UTC",
     # Adaptive execution: join selection, skew splitting, coalescing.
@@ -54,17 +49,29 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
     The driver harness owns its SparkSession; our query callables route
-    through here so fixture reads work regardless of how the session
-    was built.
+    through here so every plan runs under the same confs regardless of
+    how the session was built.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
         except Exception:
-            # Static conf on this build -- leave as-is; reader has a
-            # schema-level fallback for the nanos case.
+            # Static conf on this build -- leave as-is.
             pass
     return spark
+
+
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+
+
+def local_cores(master: str) -> int | None:
+    """Core count of a ``local``, ``local[N]`` or ``local[N,F]`` master;
+    None for ``local[*]`` and cluster masters (the caller falls back to
+    the host's cores)."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None or m.group(1) == "*":
+        return None
+    return int(m.group(1) or 1)
 
 
 def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -> SparkSession:
@@ -75,10 +82,7 @@ def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -
     passes no master and spark-submit decides.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    else:
-        cpus = "*"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     # Shuffle partitions SCALE WITH THE SESSION'S CORES (r13, VERDICT
     # r12 item 1): the pre-r13 constant 8 (an early-round sf0.1
     # measurement) capped every post-shuffle stage at 8 tasks, so an
@@ -93,13 +97,11 @@ def get_spark(app_name: str = "gmall-spark-engine", master: str | None = None) -
     # the full pre-AQE width, so the checkpoint-heavy kernels pay 2x
     # the tasks with no coalescing. AQE still coalesces ordinary
     # reads either way. Env override wins so the driver / a cluster
-    # launcher can pin an explicit value.
+    # launcher can pin an explicit value. The cores are the master's
+    # own (``local[N]``), else the host's.
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if shuffle_parts is None:
-        try:
-            n_cores = int(cpus)
-        except ValueError:
-            n_cores = os.cpu_count() or 8
+        n_cores = local_cores(master) or os.cpu_count() or 8
         shuffle_parts = str(max(8, n_cores))
     builder = (
         SparkSession.builder.appName(app_name)

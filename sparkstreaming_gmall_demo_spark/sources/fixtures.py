@@ -1,19 +1,19 @@
 """Batch fixture reader for the driver parquet tables.
 
-Timestamp encodings vary by driver round and are all handled here:
+Every table is read with its declared schema (``schemas.FIXTURE_SCHEMAS``),
+the same fixed-schema-per-source policy the stream records follow. A
+declared schema skips parquet schema inference, which would otherwise
+launch one Spark job per read (about 80 ms; there are ~190 reads in the
+registry). A file whose columns drift from the declaration fails the
+schema test in tests/test_sources.py instead of reading nulls.
 
-- ``timestamp[us]`` with no timezone (current fixtures): parquet
-  infers TIMESTAMP_NTZ. We keep the column NTZ — casting to TIMESTAMP
-  at load would wrap every downstream predicate in a cast and kill
-  parquet filter pushdown. Instead, epoch arithmetic goes through the
-  NTZ-safe ``functions.epoch_micros`` (wall-clock-identical under the
-  pinned UTC session tz), and ``events_date_filter`` emits a range
-  predicate typed to the column so row-group skipping still works.
-- TIMESTAMP(NANOS) (legacy fixtures), which Spark 4.x rejects by
-  default: with ``spark.sql.legacy.parquet.nanosAsLong=true`` the
-  column arrives as a nanos-since-epoch long; we convert with integer
-  division (``ts DIV 1000`` -> micros, NOT float division, which
-  loses precision at 1e18 magnitudes) and ``timestamp_micros``.
+Timestamps are ``timestamp[us]`` with no timezone, read as
+TIMESTAMP_NTZ. We keep the column NTZ — casting to TIMESTAMP at load
+would wrap every downstream predicate in a cast and kill parquet filter
+pushdown. Instead, epoch arithmetic goes through the NTZ-safe
+``functions.epoch_micros`` (wall-clock-identical under the pinned UTC
+session tz), and ``events_date_filter`` emits a range predicate typed
+to the column so row-group skipping still works.
 
 Scan hygiene at 100 TB: this reader adds no projection/filter of its
 own, so Catalyst pushes query-level filters and column pruning straight
@@ -27,32 +27,17 @@ import datetime as _dt
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..session import ensure_runtime_confs
-from ..schemas import FIXTURE_TABLES
-
-_DAY_NANOS = 86_400 * 10**9
+from ..schemas import FIXTURE_SCHEMAS, FIXTURE_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one fixture table, normalizing timestamp encodings."""
+    """Load one fixture table with its declared schema; starts no job."""
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{table}.parquet")
-    # Any nanos-long timestamp column (events.ts today) -> TimestampType.
-    # Integer division keeps full precision; truncation toward zero
-    # matches DuckDB's nanos->micros read behavior for positive epochs.
-    # The raw long survives as ts_nanos: predicates on the CONVERTED
-    # column cannot reach the parquet scan (Catalyst won't invert
-    # timestamp_micros through a filter), but a range predicate on the
-    # raw long pushes down to row-group statistics — see
-    # events_date_filter. At 100 TB that's the difference between
-    # skipping a year of row groups and decoding them.
-    if table == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts_nanos", F.col("ts")).withColumn(
-            "ts", F.expr("timestamp_micros(ts DIV 1000)")
-        )
-    return df
+    return spark.read.schema(FIXTURE_SCHEMAS[table]).parquet(
+        f"{sf_dir.rstrip('/')}/{table}.parquet"
+    )
 
 
 def events_date_filter(df: DataFrame, date: str) -> Column:
@@ -67,24 +52,12 @@ def events_date_filter(df: DataFrame, date: str) -> Column:
     100 TB that's the difference between skipping a year of row groups
     and decoding them.
 
-    Handles all three fixture encodings seen across driver rounds:
-    raw nanos long (legacy ``ts_nanos``), TIMESTAMP_NTZ (current
-    ``timestamp[us]`` fixtures), and tz-aware TIMESTAMP. The literal is
-    cast to the column's own type so no implicit cast lands on the
-    column side of the comparison (which would block pushdown). UTC
-    session tz makes all three day boundaries coincide.
+    Works on TIMESTAMP_NTZ (the fixtures) and tz-aware TIMESTAMP. The
+    literal is cast to the column's own type so no implicit cast lands
+    on the column side of the comparison (which would block pushdown).
+    UTC session tz makes both day boundaries coincide.
     """
-    if "ts_nanos" in df.columns:
-        day = _dt.datetime.fromisoformat(date).replace(tzinfo=_dt.timezone.utc)
-        start = int(day.timestamp()) * 10**9
-        return (F.col("ts_nanos") >= F.lit(start)) & (
-            F.col("ts_nanos") < F.lit(start + _DAY_NANOS)
-        )
-    target = (
-        "timestamp_ntz"
-        if isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
-        else "timestamp"
-    )
+    target = df.schema["ts"].dataType
     next_day = (_dt.date.fromisoformat(date) + _dt.timedelta(days=1)).isoformat()
     lo = F.lit(f"{date} 00:00:00").cast(target)
     hi = F.lit(f"{next_day} 00:00:00").cast(target)

@@ -255,6 +255,19 @@ def test_prefix_filtered_containment_equals_naive(spark, sf_dir):
             assert fast == naive, f"threshold {t}"
 
 
+def test_prefix_filtered_kernels_reject_threshold_outside_unit_interval(spark):
+    """A threshold past 1 makes the prefix length non-positive; the
+    kernels refuse it (and 0) at the call, not inside the plan."""
+    import pytest
+
+    sets = spark.createDataFrame([(1, ["a", "b"]), (2, ["a", "c"])], "doc_id long, toks array<string>")
+    for kernel in (nd.prefix_filtered_jaccard_pairs, nd.prefix_filtered_containment_pairs):
+        for t in (0.0, 1.5, -0.2):
+            with pytest.raises(ValueError, match="threshold"):
+                kernel(sets, t)
+        assert kernel(sets, 1.0).count() == 0
+
+
 def test_bucket_jaccard_equals_selfjoin(spark, sf_dir):
     """The two exact kernels are physical variants of the same
     operator: identical output on both element spaces (unigram tokens

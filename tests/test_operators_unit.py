@@ -191,6 +191,26 @@ def test_connected_components_planted_clusters(spark):
                    20: 20, 21: 20, 22: 20, 23: 20}
 
 
+def test_connected_components_warns_at_max_iter(spark):
+    """A chain of diameter 9 needs more than three propagation steps:
+    stopping at the cap warns, and the default cap converges silently."""
+    import warnings
+
+    import pytest
+
+    from sparkstreaming_gmall_demo_spark.operators.components import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "i long, j long")
+    with pytest.warns(RuntimeWarning, match="max_iter=3"):
+        connected_components(pairs, max_iter=3).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = {r.component for r in connected_components(pairs).collect()}
+    assert got == {0}
+
+
 def test_keep_canonical_collapses_clusters(spark):
     from sparkstreaming_gmall_demo_spark.operators.components import (
         connected_components,

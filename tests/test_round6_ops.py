@@ -677,6 +677,33 @@ def test_dedup_aware_split_singletons_match_plain_split(spark):
     assert out == plain  # no pairs -> identical to the per-doc split
 
 
+def test_curation_bundle_matches_unfused_composition(spark):
+    """The fused bundle reports, per split, what keep_best and
+    dedup_aware_split report when composed separately over the same
+    component labels."""
+    from sparkstreaming_gmall_demo_spark.operators import components as comp_ops
+
+    splits = {"train": 0.5, "val": 0.25, "test": 0.25}
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (30, 31), (31, 32), (32, 33)], "i long, j long"
+    )
+    docs = spark.createDataFrame(
+        [(i, (i * 37) % 11) for i in [1, 2, 3, 10, 11, 20, 21, 22, 30, 31, 32, 33, 40]],
+        "doc_id long, n_chars long",
+    )
+    got = [tuple(r) for r in samp.curation_bundle(docs, pairs, splits).collect()]
+
+    labels = comp_ops.connected_components(pairs)
+    kept = {r.doc_id for r in comp_ops.keep_best(docs, labels, "n_chars").collect()}
+    assigned = samp.dedup_aware_split(docs, labels, splits).collect()
+    want = []
+    for split in sorted({r.split for r in assigned}):
+        rows = [r for r in assigned if r.split == split]
+        want.append((split, len(rows), len({r.group_key for r in rows}),
+                     sum(r.doc_id in kept for r in rows)))
+    assert got == want
+
+
 def test_hll_prefix_estimates_duplicate_day_rows(spark):
     """A raw per-batch partials snapshot can hold several rows for one
     day; the range-framed running union must give every same-day row
